@@ -877,15 +877,16 @@ def q_rolling_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """the hot/cold planner: entities above the threshold run the bucketed
     decomposition, the rest the fused plain path, results unioned — exact
-    either way, so one oracle covers both branches (threshold 50 puts the
-    heavy users on the bucketed branch at sf0.01)."""
+    either way, so one oracle covers both branches (threshold 30 puts the
+    heaviest users on the bucketed branch: 3 at sf0.001, 31 at sf0.01, 325
+    at sf0.1)."""
     from feathr_online_spark.operators.pit import pit_enrich
 
     events = _t(spark, sf_dir, "events")
     left = _pit_left(events, null_inject=True)
     feat = _pit_feat(events, alias="pv")
     out = pit_enrich(left, feat, strict=True, session_gap=1800, ffill_cols=["v"],
-                     hot_threshold=50, bucket_seconds=86400)
+                     hot_threshold=30, bucket_seconds=86400)
     return out.select(
         "event_id", F.col("entity").alias("user_id"),
         F.unix_micros("event_time").alias("ts_us"),

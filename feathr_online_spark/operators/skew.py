@@ -19,11 +19,17 @@ per-(entity, bucket) summary table:
 - sessionize: within-bucket session ordinals; the bucket's first-row gap is
   re-checked against the previous bucket's last timestamp, and ordinals are
   shifted by the running sum of corrected per-bucket session counts.  Exact.
-- rolling (rows mode): the last N rows of each bucket are replicated into the
-  entity's next present bucket as context rows (excluded from output), so the
-  trailing frame sees its true predecessors.  Exact when each present bucket
-  holds ≥ N rows per entity (the hot-entity case by construction); choose
-  ``bucket_seconds`` accordingly.
+- rolling: the tail of each bucket (its last N rows, or its rows within the
+  time range of its end) is replicated into the entity's next present bucket
+  as context rows (excluded from output), so the trailing frame sees its
+  true predecessors.  The time-range form is exact; the rows form is exact
+  when every interior bucket holds ≥ N rows (``rolling_bucketed`` checks
+  this and falls back to the plain window for entities that fail it).
+
+``pit_fused_bucketed`` is the composite the hot path of
+``pit.pit_enrich`` runs: all four derivations over ONE (entity, bucket)
+sort, repaired by one summary pass.  The single-operator functions stay as
+standalone operators (each pays its own shuffle and summary join).
 
 Every pass is Column-only; the big data is shuffled on (entity, bucket) —
 hot entities split across buckets by design.
@@ -34,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from feathr_online_spark.operators.windows import ROLL_FNS, gap_micros, rolling
 
 
 def _bkt(ts_col: str, bucket_seconds: int) -> Column:
@@ -218,7 +226,7 @@ def sessionize_bucketed(
     # gap math in MICROSECONDS (see operators.windows.sessionize)
     is_new_raw = (
         prev_in.isNull()
-        | (F.unix_micros(F.col(ts)) - F.unix_micros(prev_in) > F.lit(gap_seconds) * 1_000_000)
+        | (F.unix_micros(F.col(ts)) - F.unix_micros(prev_in) > gap_micros(gap_seconds))
     ).cast("long")
     run = Window.partitionBy(on, "__bkt").orderBy(ts).rowsBetween(Window.unboundedPreceding, Window.currentRow)
     d2 = d.withColumn("__s_raw", F.sum(is_new_raw).over(run))
@@ -235,7 +243,7 @@ def sessionize_bucketed(
                 F.col("__prev_last").isNotNull()
                 & (
                     F.unix_micros("__first_ts") - F.unix_micros("__prev_last")
-                    <= F.lit(gap_seconds) * 1_000_000
+                    <= gap_micros(gap_seconds)
                 ),
                 F.lit(-1),
             ).otherwise(F.lit(0)).cast("long"),
@@ -258,8 +266,8 @@ def sessionize_bucketed(
 
 
 # ---------------------------------------------------------------------------
-# Fused bucketed PIT: as-of + forward-fill + time-range rolling in ONE
-# within-bucket pass + ONE summary/carry pass
+# Fused bucketed PIT: as-of + forward-fill + rolling + sessions over ONE
+# (entity, bucket) sort, repaired from per-(entity, bucket) summaries
 # ---------------------------------------------------------------------------
 
 def pit_fused_bucketed(
@@ -270,34 +278,48 @@ def pit_fused_bucketed(
     right_ts: str = "feature_time",
     strict: bool = True,
     ffill_cols: list[str] | None = None,
-    rolling_spec: dict | None = None,   # {"name", "col", "fn", "range_seconds", "include_current": False}
+    rolling_spec: dict | None = None,   # {"name", "col", "fn", "rows" | "range_seconds", "include_current": False}
     session_gap: int | None = None,
     bucket_seconds: int = 86400,
 ) -> DataFrame:
-    """The skew-proof composite, fused: strict-`<` as-of join, forward-fill of
-    event columns and a time-range trailing aggregate all computed over ONE
-    (entity, bucket) shuffle+sort of the tagged event∪feature∪context stream,
-    repaired by ONE tiny summary/carry join.  Gap sessionization is FUSED
-    into the same sort too: the raw ordinal is a conditional running sum
-    whose "previous event" comes from a (unboundedPreceding, -1) frame, and
-    the cross-bucket repair rides the summary pass — so adding sessions
-    costs zero extra big-data shuffles.
+    """The skew-proof composite: strict-`<` as-of join, forward-fill, a
+    trailing aggregate and gap sessions, all from ONE (entity, bucket)
+    shuffle+sort of the tagged event∪feature∪context stream.
 
-    Why fusion matters: the single-operator bucketed variants each pay their
-    own shuffle + summary join; composed naively that is 4× the stage walls
-    of the plain path.  Fused, the bucketed plan costs ~2 big-data passes —
-    close enough to the plain path's one that the skew-proofing is nearly
-    free, and strictly necessary once a hot key exceeds task capacity.
+    Everything else runs on per-(entity, bucket) summaries: the bucket
+    aggregates come from the same window pass over the stream without
+    context rows (the one other event-sized shuffle, narrowed to the columns
+    the summaries read), one window over the entity's buckets turns them
+    into carries (last feature row, last non-null fill values, session
+    offsets), and one join attaches the carries back.  The entity key is
+    ``struct(on)`` — a non-null struct whose null field still equals itself
+    — so null entities keep their own group while that join stays a plain
+    equi-join on the window's partitioning: the event side is not shuffled
+    again.
 
-    Mechanics that make interleaved row kinds safe in one window pass:
-    - as-of: running ``last(payload, ignorenulls)`` — event and context rows
-      carry null payload, so they simply don't contribute;
-    - forward-fill: ``last(when(real event, col), ignorenulls)``;
-    - rolling: value-based RANGE frame over unix seconds with a conditional
-      aggregate ``fn(when(real-or-context event, col))`` — feature rows in
-      frame contribute null, context rows are the true predecessors
-      replicated from the previous present bucket, and their originals live
-      in another partition so nothing double-counts.
+    - as-of: running ``last(payload, ignorenulls)``; event and context rows
+      carry a null payload.  Final payload = coalesce(within, carry).
+    - forward-fill (``ffill_cols``): an event column fills from earlier
+      events; a feature payload column fills over the values the as-of join
+      attached to earlier events, as ``forward_fill`` after ``asof_join``
+      does.
+    - rolling (``rolling_spec``): context rows — the tail of each event
+      bucket (its last ``rows`` events, or the events within
+      ``range_seconds`` of its end) — are replicated into the entity's next
+      event bucket, so a bucket's frames see their true predecessors.  The
+      time-range form is exact for ``range_seconds ≤ bucket_seconds``.  The
+      ``rows`` form is exact when every interior event bucket of an entity
+      (one with earlier and later event buckets) holds at least ``rows``
+      events; ``pit_enrich`` routes entities that do not to the plain path.
+      Rows mode ranks each bucket's events to pick the tail; the rank limit
+      applies map-side, so that shuffle carries ≤ ``rows`` events per bucket
+      and map task.
+    - sessions (``session_gap``): raw ordinals within the bucket; each
+      bucket's first gap is re-checked against the previous event bucket's
+      last timestamp, and corrected counts are prefix-summed into offsets.
+
+    Feature rows with a null timestamp are dropped (as ``asof_join`` does);
+    null-timestamp events sit in the earliest, sentinel bucket.
     """
     from pyspark.sql.types import StructType
 
@@ -310,205 +332,208 @@ def pit_fused_bucketed(
     overlap = set(payload) & set(events.columns)
     if overlap:
         raise ValueError(f"pit_fused_bucketed: column collision {sorted(overlap)}")
+    unknown = [c for c in ffill_cols if c not in event_cols and c not in payload]
+    if unknown:
+        raise ValueError(f"pit_fused_bucketed: ffill_cols {unknown} are neither event "
+                         "nor feature payload columns")
+    ev_fill = [c for c in event_cols if c in ffill_cols]
+    pl_fill = [c for c in payload if c in ffill_cols]
+    rows = rng = None
+    if rolling_spec is not None:
+        rows, rng = rolling_spec.get("rows"), rolling_spec.get("range_seconds")
+        if (rows is None) == (rng is None):
+            raise ValueError("pit_fused_bucketed rolling_spec needs exactly one of 'rows' "
+                             "(the last N events) or 'range_seconds' (a trailing time range)")
+        if rng is not None and rng > bucket_seconds:
+            raise ValueError("rolling range_seconds must be ≤ bucket_seconds")
+        if rolling_spec["col"] not in event_cols:
+            raise ValueError("pit_fused_bucketed rolling_spec col must be an event column, "
+                             f"got {rolling_spec['col']!r}")
+        inc = rolling_spec.get("include_current", False)
     feat_tag, event_tag = (1, 0) if strict else (0, 1)
     tiebreak = F.xxhash64(*[F.col(c) for c in payload])
 
     # Whole-row payload struct (see asof._asof_union): the as-of attach is the
-    # winning feature ROW, nulls preserved.  (ffill stays per-column — that IS
-    # forward-fill's semantics.)
+    # winning feature ROW, nulls preserved.
     pl_type = StructType([features.schema[c] for c in payload])
+    key = F.struct(F.col(on)).alias("__k")
 
     ev = events.select(
-        F.col(on), F.col(left_ts).alias("__ts"), F.lit(event_tag).alias("__tag"),
+        key, F.col(on), F.col(left_ts).alias("__ts"), F.lit(event_tag).alias("__tag"),
         F.lit(0).cast("long").alias("__tb"),
         *[F.col(c) for c in event_cols],
         F.lit(None).cast(pl_type).alias("__pl"),
-    )
-    ft = features.select(
-        F.col(on), F.col(right_ts).alias("__ts"), F.lit(feat_tag).alias("__tag"),
+    ).withColumns({"__bkt": _bkt("__ts", bucket_seconds), "__ctx": F.lit(0)})
+    ft = features.filter(F.col(right_ts).isNotNull()).select(
+        key, F.col(on), F.col(right_ts).alias("__ts"), F.lit(feat_tag).alias("__tag"),
         tiebreak.cast("long").alias("__tb"),
         *[F.lit(None).cast(events.schema[c].dataType).alias(c) for c in event_cols],
         F.struct(*[F.col(c) for c in payload]).alias("__pl"),
-    )
-    un = ev.unionByName(ft).withColumn("__bkt", _bkt("__ts", bucket_seconds)).withColumn(
-        "__ctx", F.lit(0)
-    )
-    # ONE distinct over the big unioned stream serves both the rolling
-    # context chain and the carry domain (it was computed twice before —
-    # two full aggregations of the largest intermediate)
-    domain = un.select(on, "__bkt").distinct()
+    ).withColumns({"__bkt": _bkt("__ts", bucket_seconds), "__ctx": F.lit(0)})
+    un = ev.unionByName(ft)
+    w_bkt = Window.partitionBy("__k").orderBy("__bkt")
 
-    # context rows for the rolling frame: real events near their bucket's end,
-    # replicated into the entity's next PRESENT bucket
+    # context rows for the rolling frame: each event bucket's tail, replicated
+    # into the entity's next event bucket
     if rolling_spec is not None:
-        if "range_seconds" not in rolling_spec:
-            raise ValueError("pit_fused_bucketed rolling_spec needs 'range_seconds' "
-                             "(time mode); pit_enrich's rolling_spec uses 'rows'")
-        rng = int(rolling_spec["range_seconds"])
-        if rng > bucket_seconds:
-            raise ValueError("rolling range_seconds must be ≤ bucket_seconds")
-        chain = domain.withColumn(
-            "__next_bkt", F.lead("__bkt").over(Window.partitionBy(on).orderBy("__bkt"))
-        )
-        bucket_end_us = ((F.col("__bkt") + 1) * bucket_seconds).cast("long") * 1_000_000
+        if rows is not None:
+            # rank-limit filter: Spark applies it map-side (WindowGroupLimit),
+            # so this shuffle carries ≤ rows events per bucket and map task
+            tail = ev.withColumn("__rnd", F.row_number().over(
+                Window.partitionBy("__k", "__bkt").orderBy(F.col("__ts").desc())),
+            ).filter(F.col("__rnd") <= rows).drop("__rnd")
+        else:
+            bucket_end_us = ((F.col("__bkt") + 1) * bucket_seconds).cast("long") * 1_000_000
+            tail = ev.filter(F.unix_micros(F.col("__ts")) >= bucket_end_us - rng * 1_000_000)
+        chain = ev.select("__k", "__bkt").distinct().withColumn(
+            "__next", F.lead("__bkt").over(w_bkt))
         ctx = (
-            _ns_join(
-                un.filter((F.col("__tag") == event_tag)
-                          & (F.unix_micros(F.col("__ts")) >= bucket_end_us - rng * 1_000_000)),
-                chain, on,
-            )
-            .filter(F.col("__next_bkt").isNotNull())
-            .withColumn("__bkt", F.col("__next_bkt"))
-            .drop("__next_bkt")
-            .withColumn("__ctx", F.lit(1))
+            tail.join(chain, ["__k", "__bkt"])
+            .filter(F.col("__next").isNotNull())
+            .withColumns({"__bkt": F.col("__next"), "__ctx": F.lit(1)})
+            .drop("__next")
         )
         aug = un.unionByName(ctx)
     else:
         aug = un
 
-    # ---- single within-bucket pass: all running windows share one sort ----
-    w_last = (
-        Window.partitionBy(on, "__bkt")
-        .orderBy("__ts", "__tag", "__tb", "__ctx")
+    # ---- the one big pass: every within-bucket window shares one sort ----
+    is_ev = F.col("__tag") == event_tag
+    is_real = is_ev & (F.col("__ctx") == 0)
+    order = ("__ts", "__tag", "__tb", "__ctx")
+    w_run = (
+        Window.partitionBy("__k", "__bkt").orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     cols = [
-        F.col(on), F.col("__ts"), F.col("__tag"), F.col("__bkt"), F.col("__ctx"),
-        *[F.col(c) for c in event_cols],
-        F.last(F.col("__pl"), ignorenulls=True).over(w_last).alias("__in_pl"),
-        *[
-            F.last(F.when((F.col("__tag") == event_tag) & (F.col("__ctx") == 0), F.col(c)),
-                   ignorenulls=True).over(w_last).alias(f"__in_f_{c}")
-            for c in ffill_cols
-        ],
+        *[F.col(c) for c in ("__k", on, "__ts", "__tag", "__tb", "__bkt", "__ctx", *event_cols)],
+        F.last(F.col("__pl"), ignorenulls=True).over(w_run).alias("__in_pl"),
+        *[F.last(F.when(is_real, F.col(c)), ignorenulls=True).over(w_run).alias(f"__in_f_{c}")
+          for c in ev_fill],
     ]
     if rolling_spec is not None:
-        fns = {"sum": F.sum, "avg": F.avg, "min": F.min, "max": F.max,
-               "count": F.count, "stddev": F.stddev}
-        inc = rolling_spec.get("include_current", False)
-        w_roll = (
-            Window.partitionBy(on, "__bkt")
-            .orderBy(F.unix_micros(F.col("__ts")))
-            .rangeBetween(-int(rolling_spec["range_seconds"]) * 1_000_000, 0 if inc else -1)
-        )
-        cols.append(
-            fns[rolling_spec["fn"]](
-                F.when(F.col("__tag") == event_tag, F.col(rolling_spec["col"]))
-            ).over(w_roll).alias(rolling_spec["name"])
-        )
-    is_event = (F.col("__tag") == event_tag) & (F.col("__ctx") == 0)
+        fn = ROLL_FNS[rolling_spec["fn"]]
+        if rows is not None:
+            # a rows frame must count events only: the tag joins the window
+            # key (a superset of the shuffle key, so no new exchange) and the
+            # frame slides over real + context events
+            w_roll = (
+                Window.partitionBy("__k", "__bkt", "__tag").orderBy("__ts", "__ctx")
+                .rowsBetween(-(rows - 1) if inc else -rows, Window.currentRow if inc else -1)
+            )
+            value = fn(F.col(rolling_spec["col"]))
+        else:
+            # value-based frame: feature rows in it contribute null
+            w_roll = (
+                Window.partitionBy("__k", "__bkt").orderBy(F.unix_micros(F.col("__ts")))
+                .rangeBetween(-rng * 1_000_000, 0 if inc else -1)
+            )
+            value = fn(F.when(is_ev, F.col(rolling_spec["col"])))
+        cols.append(value.over(w_roll).alias(rolling_spec["name"]))
     if session_gap is not None:
-        # FUSED sessionization: the within-bucket raw ordinal rides the same
-        # (entity, bucket) sort as every other frame — no second big-data
-        # shuffle.  "Previous event's timestamp" is a conditional last() over
-        # (unboundedPreceding, -1): feature and context rows contribute
-        # nothing, so the gap check sees only the bucket's real events.
+        # "previous event's timestamp" is a conditional last() over the rows
+        # before: feature and context rows contribute nothing
         w_prev = (
-            Window.partitionBy(on, "__bkt")
-            .orderBy("__ts", "__tag", "__tb", "__ctx")
+            Window.partitionBy("__k", "__bkt").orderBy(*order)
             .rowsBetween(Window.unboundedPreceding, -1)
         )
         prev_ev_us = F.last(
-            F.when(is_event, F.unix_micros(F.col("__ts"))), ignorenulls=True
+            F.when(is_real, F.unix_micros(F.col("__ts"))), ignorenulls=True
         ).over(w_prev)
         is_new = F.when(
-            is_event,
-            (
-                prev_ev_us.isNull()
-                | (F.unix_micros(F.col("__ts")) - prev_ev_us > F.lit(session_gap) * 1_000_000)
-            ).cast("long"),
+            is_real,
+            (prev_ev_us.isNull()
+             | (F.unix_micros(F.col("__ts")) - prev_ev_us > gap_micros(session_gap))).cast("long"),
         )
-        cols.append(F.sum(is_new).over(w_last).alias("__s_raw"))
-    within = aug.select(*cols)
+        cols.append(F.sum(is_new).over(w_run).alias("__s_raw"))
 
-    # ---- tiny summary/carry pass (features + ffill sources per bucket) ----
-    fb = ft.withColumn("__bkt", _bkt("__ts", bucket_seconds))
-    fsum = fb.groupBy(on, "__bkt").agg(
-        F.max_by(F.col("__pl"), F.struct("__ts", "__tb")).alias("__pl")
+    def big_pass(stream: DataFrame) -> DataFrame:
+        out = stream.select(*cols)
+        if pl_fill:
+            # fill over the values attached to earlier events: the in-bucket
+            # ones (a second window over the same sort), else the carry the
+            # bucket's early events got (__pre: one of them came before any
+            # in-bucket feature), else the previous buckets' fill
+            out = out.withColumns({
+                "__pre": F.max(F.when(is_real & F.col("__in_pl").isNull(), 1)).over(w_run),
+                **{f"__in_fp_{c}": F.last(F.when(is_real, F.col("__in_pl").getField(c)),
+                                          ignorenulls=True).over(w_run)
+                   for c in pl_fill},
+            })
+        return out.filter(is_real)
+
+    events_out = big_pass(aug)
+
+    # ---- per-(entity, bucket) summaries ----
+    def last_nonnull(c: Column) -> Column:
+        return F.max_by(c, F.when(c.isNotNull(), F.struct("__ts")))
+
+    # event buckets, aggregated on the window's own partitioning.  Context
+    # rows move only the rolling frame, so this pass runs without them.
+    bsum = big_pass(un).groupBy("__k", "__bkt").agg(
+        F.count(F.lit(1)).alias("__n"),   # a row per event bucket whatever else is on
+        *[last_nonnull(F.col(c)).alias(f"__e_{c}") for c in ev_fill],
+        *([F.max("__s_raw").alias("__raw_news"), F.min("__ts").alias("__first_ts"),
+           F.max("__ts").alias("__last_ts")] if session_gap is not None else []),
+        *([F.max("__pre").alias("__b_pre")] if pl_fill else []),
+        *[last_nonnull(F.col("__in_pl").getField(c)).alias(f"__b_fp_{c}") for c in pl_fill],
     )
-    w_b = Window.partitionBy(on).orderBy("__bkt").rowsBetween(Window.unboundedPreceding, -1)
-    joined = _ns_join(domain, fsum, on, how="left")
-    if ffill_cols:
-        eb = ev.withColumn("__bkt", _bkt("__ts", bucket_seconds))
-        esum = eb.groupBy(on, "__bkt").agg(
-            *[F.max_by(F.col(c), F.when(F.col(c).isNotNull(), F.col("__ts"))).alias(f"__e_{c}")
-              for c in ffill_cols]
-        )
-        joined = _ns_join(joined, esum, on, how="left")
-    carry = (
-        joined
-        .select(
-            F.col(on), "__bkt",
-            F.last(F.col("__pl"), ignorenulls=True).over(w_b).alias("__carry_pl"),
-            *[F.last(F.col(f"__e_{c}"), ignorenulls=True).over(w_b).alias(f"__carry_f_{c}")
-              for c in ffill_cols],
-        )
-    )
-
-    kept = _ns_join(within.filter(is_event), carry, on)
-
+    # every feature bucket's last row (max (ts, tiebreak)); it sorts after
+    # the event bucket of the same id, so carries reach only later buckets
+    fsum = ft.groupBy("__k", "__bkt").agg(
+        F.max_by(F.col("__pl"), F.struct("__ts", "__tb")).alias("__pl"))
+    summ = bsum.withColumns({"__is_f": F.lit(0), "__pl": F.lit(None).cast(pl_type)}).unionByName(
+        fsum.withColumn("__is_f", F.lit(1)), allowMissingColumns=True)
+    before = (Window.partitionBy("__k").orderBy("__bkt", "__is_f")
+              .rowsBetween(Window.unboundedPreceding, -1))
+    summ = summ.withColumns({
+        "__carry_pl": F.last(F.col("__pl"), ignorenulls=True).over(before),
+        **{f"__carry_f_{c}": F.last(F.col(f"__e_{c}"), ignorenulls=True).over(before)
+           for c in ev_fill},
+    }).filter(F.col("__is_f") == 0)
+    # chains over event buckets only (same partitioning and order)
+    before_ev = w_bkt.rowsBetween(Window.unboundedPreceding, -1)
+    if pl_fill:
+        summ = summ.withColumns({
+            f"__carry_fp_{c}": F.last(
+                F.coalesce(F.col(f"__b_fp_{c}"),
+                           F.when(F.col("__b_pre") == 1, F.col("__carry_pl").getField(c))),
+                ignorenulls=True).over(before_ev)
+            for c in pl_fill
+        })
     if session_gap is not None:
-        # cross-bucket session repair on a TINY per-(entity, event-bucket)
-        # summary (same scheme as sessionize_bucketed): re-check the bucket's
-        # first-event gap against the previous event-bucket's last timestamp
-        # and prefix-sum corrected session counts into offsets.  The groupBy
-        # keys equal the window partitioning (map-side combinable), so the
-        # repair adds no shuffle OF THE OUTPUT — unlike the old follow-up
-        # sessionize_bucketed pass, which re-bucketed and re-sorted every
-        # output row (measured 3.5 s → 2.2 s at sf0.1).
-        raw_counts = (
-            within.filter(is_event)
-            .groupBy(on, "__bkt")
-            .agg(
-                F.max("__s_raw").alias("__raw_news"),
-                F.min("__ts").alias("__first_ts"),
-                F.max("__ts").alias("__last_ts"),
-            )
+        prev_last = F.lag("__last_ts").over(w_bkt)
+        summ = summ.withColumn(
+            "__adjust",
+            F.when(prev_last.isNotNull()
+                   & (F.unix_micros("__first_ts") - F.unix_micros(prev_last)
+                      <= gap_micros(session_gap)), F.lit(-1)).otherwise(F.lit(0)).cast("long"),
+        ).withColumn(
+            "__offset",
+            F.coalesce(F.sum(F.col("__raw_news") + F.col("__adjust")).over(before_ev), F.lit(0)),
         )
-        w_prev_b = Window.partitionBy(on).orderBy("__bkt")
-        summ = (
-            raw_counts
-            .withColumn("__prev_last", F.lag("__last_ts").over(w_prev_b))
-            .withColumn(
-                "__adjust",
-                F.when(
-                    F.col("__prev_last").isNotNull()
-                    & (
-                        F.unix_micros("__first_ts") - F.unix_micros("__prev_last")
-                        <= F.lit(session_gap) * 1_000_000
-                    ),
-                    F.lit(-1),
-                ).otherwise(F.lit(0)).cast("long"),
-            )
-            .withColumn(
-                "__offset",
-                F.coalesce(
-                    F.sum(F.col("__raw_news") + F.col("__adjust")).over(
-                        Window.partitionBy(on).orderBy("__bkt")
-                        .rowsBetween(Window.unboundedPreceding, -1)
-                    ),
-                    F.lit(0),
-                ),
-            )
-            .select(on, "__bkt", "__adjust", "__offset")
-        )
-        kept = _ns_join(kept, summ, on)
 
-    out = (
-        kept
-        .withColumn("__pl2", F.coalesce(F.col("__in_pl"), F.col("__carry_pl")))
-        .select(
-            F.col(on), F.col("__ts").alias(left_ts),
-            *[c for c in event_cols if c not in ffill_cols],
-            *[F.coalesce(F.col(f"__in_f_{c}"), F.col(f"__carry_f_{c}")).alias(c) for c in ffill_cols],
-            *[F.col("__pl2").getField(c).alias(c) for c in payload],
-            *([rolling_spec["name"]] if rolling_spec is not None else []),
-            *([
-                (F.col("__offset") + F.col("__s_raw") + F.col("__adjust") - 1).alias("session_id")
-            ] if session_gap is not None else []),
-        )
+    kept = events_out.join(summ, ["__k", "__bkt"])
+    pl = F.coalesce(F.col("__in_pl"), F.col("__carry_pl"))
+
+    def payload_col(c: str) -> Column:
+        if c not in pl_fill:
+            return pl.getField(c).alias(c)
+        return F.coalesce(
+            F.col(f"__in_fp_{c}"),
+            F.when(F.col("__pre") == 1, F.col("__carry_pl").getField(c)),
+            F.col(f"__carry_fp_{c}"),
+        ).alias(c)
+
+    return kept.select(
+        F.col(on), F.col("__ts").alias(left_ts),
+        *[F.coalesce(F.col(f"__in_f_{c}"), F.col(f"__carry_f_{c}")).alias(c) if c in ev_fill
+          else F.col(c) for c in event_cols],
+        *[payload_col(c) for c in payload],
+        *([rolling_spec["name"]] if rolling_spec is not None else []),
+        *([(F.col("__offset") + F.col("__s_raw") + F.col("__adjust") - 1).alias("session_id")]
+          if session_gap is not None else []),
     )
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -629,7 +654,6 @@ def rolling_bucketed(
     )
     aug = d.unionByName(tails)
 
-    fns = {"sum": F.sum, "avg": F.avg, "min": F.min, "max": F.max, "count": F.count, "stddev": F.stddev}
     if rows is not None:
         upper = Window.currentRow if include_current else -1
         lower = -(rows - 1) if include_current else -rows
@@ -640,11 +664,9 @@ def rolling_bucketed(
             .orderBy(F.unix_micros(F.col(ts)))
             .rangeBetween(-range_seconds * 1_000_000, 0 if include_current else -1)
         )
-    out = aug.withColumns({name: fns[fn](col).over(w) for name, (col, fn) in aggs.items()})
+    out = aug.withColumns({name: ROLL_FNS[fn](col).over(w) for name, (col, fn) in aggs.items()})
     out = out.filter(F.col("__ctx") == 0).drop("__bkt", "__ctx")
     if affected is not None:
-        from feathr_online_spark.operators.windows import rolling
-
         out = out.unionByName(
             rolling(sparse_src, aggs, on=on, ts=ts, rows=rows,
                     include_current=include_current)

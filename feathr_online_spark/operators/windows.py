@@ -22,8 +22,20 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window, WindowSpec
 
 
+#: the trailing-window aggregates ``rolling`` and the bucketed variants accept
+ROLL_FNS = {"sum": F.sum, "avg": F.avg, "min": F.min, "max": F.max,
+            "count": F.count, "stddev": F.stddev}
+
+
 def entity_window(on: str = "entity", ts: str = "event_time") -> WindowSpec:
     return Window.partitionBy(on).orderBy(ts)
+
+
+def gap_micros(gap_seconds: int) -> Column:
+    """A session gap in microseconds as a LONG literal.  ``F.lit(gap) *
+    1_000_000`` multiplies two 32-bit ints and wraps negative for gaps above
+    2147 s, which turns every row into its own session."""
+    return F.lit(int(gap_seconds) * 1_000_000).cast("long")
 
 
 def lag_lead(
@@ -75,11 +87,9 @@ def rolling(
             .orderBy(F.unix_micros(F.col(ts)))
             .rangeBetween(-range_seconds * 1_000_000, 0 if include_current else -1)
         )
-    fns = {"sum": F.sum, "avg": F.avg, "min": F.min, "max": F.max,
-           "count": F.count, "stddev": F.stddev}
     out = {}
     for name, (col, fn) in aggs.items():
-        out[name] = fns[fn](col).over(w)
+        out[name] = ROLL_FNS[fn](col).over(w)
     return df.withColumns(out)
 
 
@@ -104,7 +114,7 @@ def sessionize(
     # gap boundaries).
     is_new = (
         prev.isNull()
-        | (F.unix_micros(F.col(ts)) - F.unix_micros(prev) > F.lit(gap_seconds) * 1_000_000)
+        | (F.unix_micros(F.col(ts)) - F.unix_micros(prev) > gap_micros(gap_seconds))
     ).cast("long")
     run = Window.partitionBy(on).orderBy(ts).rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return df.withColumn(session_col, F.sum(is_new).over(run) - F.lit(1))

@@ -10,8 +10,9 @@ Pipeline per BASELINE.json's north rule:
   → token-derived features map-side (raw arrays dropped pre-shuffle)
   → resume filter (anti-join against the checkpoint manifest)
   → strict-< as-of join + rolling/sessionize/forward-fill
-    (hot/cold split: fused single-sort path for cold entities, bucketed
-     exact decomposition for Zipf-hot ones — operators/pit.py)
+    (hot/cold split decided at build time: single-sort plain path for cold
+     entities, one fused (entity, day-bucket) pass for Zipf-hot ones —
+     operators/pit.py)
   → write partitioned output + per-partition lineage rows + manifest marks.
 
 Iceberg: on a cluster with the iceberg-spark runtime on the classpath, pass

@@ -311,3 +311,17 @@ def test_asof_cogroup_null_ts_matches_union(spark):
     for strategy in ("union", "cogroup"):
         got = {r.eid: r.f for r in asof_join(events, features, strategy=strategy).collect()}
         assert got == {1: 7.0, 2: None}, strategy
+
+
+def test_sessionize_bucketed_gap_of_an_hour(spark):
+    """The bucketed sessionizer's within-bucket check and its cross-bucket
+    repair both take a 3600 s gap without 32-bit wrap: a 50-minute step
+    across a bucket boundary continues the session, 70 minutes does not."""
+    t = lambda h, m: BASE + timedelta(hours=h, minutes=m)
+    df = spark.createDataFrame(
+        [(1, t(0, 10)), (1, t(0, 50)), (1, t(1, 40)), (1, t(2, 50)), (1, t(3, 30))],
+        "entity long, event_time timestamp",
+    )
+    out = sessionize_bucketed(df, gap_seconds=3600, bucket_seconds=BUCKET)
+    got = sorted((r.event_time, r.session_id) for r in out.collect())
+    assert [s for _, s in got] == [0, 0, 0, 1, 1]

@@ -110,3 +110,16 @@ def test_windows_share_one_shuffle(series):
     out = sessionize(series, gap_seconds=1800)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1
+
+
+def test_sessionize_gap_of_an_hour(spark):
+    """Gaps above 2147 s must not wrap in 32-bit arithmetic: with a 3600 s
+    gap, 40- and 60-minute steps stay in one session and a 70-minute step
+    starts the next (a wrapped, negative gap made every row a session)."""
+    df = spark.createDataFrame(
+        [(1, ts(0)), (1, ts(40)), (1, datetime(2024, 1, 1, 1, 40)),
+         (1, datetime(2024, 1, 1, 2, 50))],
+        "entity long, event_time timestamp",
+    )
+    got = sorted((r.event_time, r.session_id) for r in sessionize(df, 3600).collect())
+    assert [s for _, s in got] == [0, 0, 0, 1]

@@ -83,6 +83,25 @@ def main() -> None:
         "single entity shuffle": r"Exchange hashpartitioning\(entity",
     })
 
+    # 5b. pit_enrich on the same Zipf fixture, hot threshold at 5% of rows:
+    # plain path for cold entities (one entity shuffle), ONE fused pass for
+    # the hot ones — its big shuffle keyed on (entity, bucket), the rest over
+    # per-(entity, bucket) summaries
+    from feathr_online_spark.operators.pit import pit_enrich
+
+    pe = pit_enrich(
+        spark.read.parquet(fix["sequences"]).select("doc_id", "entity", "event_time", "n_tok"),
+        spark.read.parquet(fix["features"]),
+        rolling_spec={"name": "hist_n", "col": "n_tok", "fn": "count", "rows": 16},
+        session_gap=3600, ffill_cols=["f_scalar"], hot_threshold=5_000,
+    )
+    audit("pit_enrich — hot/cold split, one fused hot pass", pe, {
+        "entity shuffle (cold path)": r"Exchange hashpartitioning\(entity",
+        "(entity, bucket) shuffle (hot path)": r"Exchange hashpartitioning\(__k[^\n]*__bkt",
+        "no cartesian product": r"!CartesianProduct",
+        "no python UDF in the plan": r"!BatchEvalPython|ArrowEvalPython",
+    })
+
     # 6. sessionize: two windows share one shuffle+sort
     audit("sessionize — shared window sort", qs["sessionize"](spark, SF), {
         "running-sum window": r"Window \[",
